@@ -13,8 +13,6 @@ import importlib.util
 import os
 import time
 
-import pyarrow.parquet as pq
-
 from .datagen import TABLES, write_tables
 from .sparkstats import stage_total, top_nodes
 from .stats import median
@@ -40,11 +38,6 @@ MIX = {
     "status_merge": "status_merge",
     "status_merge_counts": "status_merge",
 }
-# queries that stand for a crawl generation's select and merge
-GENERATION_TWINS = ("frontier_topk", "frontier_next_generation",
-                    "status_merge", "status_merge_counts")
-# layers whose queries process the corpus pages (the documents table)
-PAGE_LAYERS = ("dedup", "corpus")
 SCALE = 0.02
 
 
@@ -153,11 +146,6 @@ def run(ctx) -> dict:
         passes.append(time.perf_counter() - t_pass)
     failures.extend(check_against_oracle(ctx, data_dir, results))
 
-    n_docs = pq.ParquetFile(
-        os.path.join(data_dir, "documents.parquet")).metadata.num_rows
-    page_s = [t for q, ts in per_query.items() if MIX[q] in PAGE_LAYERS
-              for t in ts]
-    twins = [t for q in GENERATION_TWINS for t in per_query[q]]
     n = len(passes)
     layers = {}
     for m in sorted(plan_s):
@@ -165,7 +153,9 @@ def run(ctx) -> dict:
         layers[f"{m}.exec_s"] = exec_s[m] / n
     for q, ts in per_query.items():
         layers[f"q.{q}.s"] = median(ts) if ts else 0.0
-    detail = {"passes_s": passes, "queries_s": per_query}
+    query_p50 = median(latencies) if latencies else float("nan")
+    detail = {"mix_s": median(passes), "query_p50_s": query_p50,
+              "passes_s": passes, "queries_s": per_query}
     if ctx.tracer is not None:
         detail["query_split"] = [
             query_split(ctx.tracer, s) for s in ctx.tracer.spans
@@ -176,11 +166,8 @@ def run(ctx) -> dict:
         "failures": failures,
         "latencies": latencies,
         "e2e": {
-            "gen_latency_p50_s": median(twins) if twins else float("nan"),
-            "pages_per_s": n_docs * len(page_s) / sum(page_s)
-            if page_s else float("nan"),
-            "mix_s": median(passes),
-            "query_p50_s": median(latencies) if latencies else float("nan"),
+            "op_p50_s": query_p50,
+            "pass_s": median(passes),
         },
         "detail": detail,
         "layers": layers,

@@ -2,9 +2,8 @@
 
 One client runs generations back to back through ``CrawlLoop`` on a
 bucket-partitioned, adaptive frontier with a log-structured ``IndexTable``.
-After each generation it runs the monitoring mix, three read-only queries
-a crawl operator runs, MIX_REPEATS times; the answers double as the output
-checks.
+After each generation, outside the timed section, it reads the frontier and
+the index once for the output checks.
 """
 
 from __future__ import annotations
@@ -39,9 +38,8 @@ BATCH = 1000
 WARMUP_BATCH = 200
 MAX_PER_HOST = 20
 MIN_GENERATIONS = 2
-# the monitoring mix is short (~1 s), so it is repeated at each point and
-# reported as a median
-MIX_REPEATS = 3
+# request id of the traced output-check reads, which are not crawl work
+CHECK_REQUEST = "check"
 BASE_TIME = datetime(2024, 1, 15)
 
 
@@ -71,47 +69,33 @@ def inject(ctx, web: SimWeb, path: str) -> float:
     return time.perf_counter() - t0
 
 
-class MonitoringMix:
-    """Read-only queries run between generations; each returns a value the
-    crawl checks against the client's own count."""
+def due_per_host(loop: CrawlLoop) -> list[int]:
+    """Due URLs per host for the next generation."""
+    now = now_fn(loop.generation + 1)
+    rows = (
+        loop.read_frontier()
+        .where(F.col("next_fetch_date") <= F.lit(now))
+        .groupBy("key").count()
+        .collect()
+    )
+    return [r["count"] for r in rows]
 
-    def __init__(self, ctx, loop: CrawlLoop):
-        self.ctx, self.loop = ctx, loop
 
-    def status_counts(self) -> dict:
-        rows = (
-            self.loop.read_frontier().groupBy("status").count().collect()
-        )
-        return {r["status"]: r["count"] for r in rows}
+def expected_batch(due: list[int], batch: int, per_host: int) -> int:
+    """Rows a generation must select: per host, at most ``per_host`` of its
+    due URLs, and at most ``batch`` overall."""
+    return min(batch, sum(min(per_host, n) for n in due))
 
-    def next_batch_size(self) -> int:
-        """Rows the next generation must select: per host, at most
-        MAX_PER_HOST of its due URLs, and at most BATCH overall."""
-        now = now_fn(self.loop.generation + 1)
-        due = (
-            self.loop.read_frontier()
-            .where(F.col("next_fetch_date") <= F.lit(now))
-            .groupBy("key").count()
-            .agg(F.sum(F.least(F.col("count"), F.lit(MAX_PER_HOST))).alias("n"))
-            .collect()[0]["n"]
-        )
-        return min(BATCH, int(due or 0))
 
-    def index_docs(self) -> int:
-        return self.loop.index.read(self.ctx.spark).count()
-
-    def run(self) -> tuple[dict, list[float], list[float]]:
-        """Run the mix MIX_REPEATS times; returns the last answers, each
-        pass's wall time and each query's latency."""
-        passes, lat = [], []
-        for _ in range(MIX_REPEATS):
-            out, t_pass = {}, time.perf_counter()
-            for name in ("status_counts", "next_batch_size", "index_docs"):
-                t0 = time.perf_counter()
-                out[name] = getattr(self, name)()
-                lat.append(time.perf_counter() - t0)
-            passes.append(time.perf_counter() - t_pass)
-        return out, passes, lat
+def frontier_state(ctx, loop: CrawlLoop) -> dict:
+    """What the output checks compare with, read after each generation
+    outside the timed section."""
+    rows = loop.read_frontier().groupBy("status").count().collect()
+    return {
+        "status_counts": {r["status"]: r["count"] for r in rows},
+        "due": due_per_host(loop),
+        "index_docs": loop.index.read(ctx.spark).count(),
+    }
 
 
 def _install_spans(ctx) -> None:
@@ -220,7 +204,8 @@ def _loop(ctx, path: str, factory, index_dir: str) -> CrawlLoop:
 
 def run(ctx) -> dict:
     """Set up, crawl for ``ctx.seconds`` (at least MIN_GENERATIONS
-    generations), check, and return the workload's figures."""
+    generations), check each generation, and return the workload's
+    figures."""
     spark = ctx.spark
     timer = spark.sparkContext.accumulator(0.0)
     seed = ctx.seed
@@ -243,29 +228,27 @@ def run(ctx) -> dict:
     index_dir = os.path.join(ctx.work, "index")
     path = paths[-1]
     loop = _loop(ctx, path, factory, index_dir)
-    mix = MonitoringMix(ctx, loop)
     if ctx.tracer is not None:
         _install_spans(ctx)
     ctx.setup_done(builds)
 
-    gen_s, mix_s, query_s, layers, failures = [], [], [], [], []
-    fetched_total = 0
-    attempted = 0
-    # what the monitoring mix would answer before the first generation
-    # follows from the seeded pages alone: all of them are due
-    per_host = Counter(web.host(i) for i in range(N_KNOWN))
+    gen_s, failures, layers = [], [], []
+    fetched_total = attempted = 0
+    # before the first generation the state follows from the seeded pages
+    # alone: all of them are due
     state = {
         "status_counts": {"DISCOVERED": N_KNOWN},
-        "next_batch_size": min(BATCH, sum(
-            min(MAX_PER_HOST, n) for n in per_host.values())),
+        "due": list(Counter(web.host(i) for i in range(N_KNOWN)).values()),
+        "index_docs": 0,
     }
     t_start = time.perf_counter()
     while (time.perf_counter() - t_start < ctx.seconds
            or attempted < MIN_GENERATIONS):
         attempted += 1
-        expected_batch = state["next_batch_size"]
+        expected = expected_batch(state["due"], BATCH, MAX_PER_HOST)
         rows_before = sum(state["status_counts"].values())
         before_index = _files(index_dir)
+        protocol_before = timer.value
         if ctx.tracer is not None:
             ctx.tracer.request = f"gen-{loop.generation + 1}"
         try:
@@ -275,17 +258,16 @@ def run(ctx) -> dict:
                 gen_s.append(time.perf_counter() - t0)
             if ctx.tracer is not None:
                 gspan.attrs.update(ctx.stats.collect())
-            state, passes, lat = mix.run()
+                ctx.tracer.request = CHECK_REQUEST
+            state = frontier_state(ctx, loop)
         except Exception as ex:  # a failed generation is counted, not fatal
             failures.append(
                 f"generation {attempted}: {type(ex).__name__}: {ex}"[:300])
             break
-        mix_s.extend(passes)
-        query_s.extend(lat)
         fetched_total += counters["fetched_ok"]
         problems = []
-        if counters["batch"] != expected_batch:
-            problems.append(f"batch {counters['batch']} != {expected_batch}")
+        if counters["batch"] != expected:
+            problems.append(f"batch {counters['batch']} != {expected}")
         fetched_rows = state["status_counts"].get("FETCHED", 0)
         if fetched_rows != fetched_total:
             problems.append(f"FETCHED rows {fetched_rows} != pages fetched "
@@ -296,29 +278,32 @@ def run(ctx) -> dict:
         if problems:
             failures.append(f"generation {attempted}: " + "; ".join(problems))
         if ctx.tracer is not None:
-            layers.append(_gen_layers(
-                ctx, gspan, counters, path, index_dir, before_index,
-                rows_before, sum(state["status_counts"].values())))
+            g = _gen_layers(ctx, gspan, counters, path, index_dir,
+                            before_index, rows_before,
+                            sum(state["status_counts"].values()))
+            g["fetch.protocol_s"] = timer.value - protocol_before
+            layers.append(g)
     crawl_s = sum(gen_s)
+    nan = float("nan")
+    p50 = median(gen_s) if gen_s else nan
     out = {
         "attempted": attempted,
         "failures": failures,
         "latencies": gen_s,
         "e2e": {
-            "gen_latency_p50_s": median(gen_s) if gen_s else float("nan"),
-            "pages_per_s": fetched_total / crawl_s if crawl_s else float("nan"),
-            "mix_s": median(mix_s),
-            "query_p50_s": median(query_s),
+            "op_p50_s": p50,
+            "pass_s": crawl_s if gen_s else nan,
         },
-        "detail": {"generations_s": gen_s, "mix_s": mix_s,
-                   "queries_s": query_s, "pages": fetched_total,
-                   "protocol_s": timer.value - protocol_warm_s},
+        "detail": {
+            "gen_latency_p50_s": p50,
+            "pages_per_s": fetched_total / crawl_s if crawl_s else nan,
+            "generations_s": gen_s,
+            "pages": fetched_total,
+            "protocol_s": timer.value - protocol_warm_s,
+        },
         "layers": {},
     }
     if layers:
-        keys = layers[0].keys()
-        out["layers"] = {k: median([g[k] for g in layers]) for k in keys}
-        out["layers"]["fetch.protocol_s"] = (
-            timer.value - protocol_warm_s) / len(layers)
+        out["layers"] = {k: median([g[k] for g in layers]) for k in layers[0]}
         out["detail"]["generation_layers"] = layers
     return out

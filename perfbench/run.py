@@ -45,15 +45,17 @@ WORKLOADS = ("crawl_throughput", "analytics_mix")
 SETUP_REPEATS = 3
 CORES = 4
 # two shuffle partitions per core, through the engine's own knob; its
-# default (32) is sized for a 32-core box
+# default (32) is sized for a 32-core box. Set SPARK_GRAFT_SHUFFLE in the
+# environment to run with another value, such as the default.
 SHUFFLE_PARTITIONS = 2 * CORES
 
+# Both workloads report every metric: op_p50_s is the median latency of one
+# operation (a generation, a query), pass_s the wall time of the timed
+# operations (the crawl's generations, one pass over the query mix).
 E2E_UNITS = {
     "setup_s": "s",
-    "gen_latency_p50_s": "s",
-    "pages_per_s": "1/s",
-    "mix_s": "s",
-    "query_p50_s": "s",
+    "op_p50_s": "s",
+    "pass_s": "s",
 }
 CRAWL_LAYERS = {
     "crawl_loop.jobs_per_gen": "count",
@@ -157,11 +159,13 @@ class Context:
 
 
 def spark_totals(tracer, timed_from: float) -> dict:
+    from perfbench.crawl import CHECK_REQUEST
     from perfbench.sparkstats import stage_total
 
     # statistics hang on action spans, and on a generation's span for the
-    # jobs read once it has ended
-    read = [s for s in tracer.spans if s.start >= timed_from]
+    # jobs read once it has ended; the crawl's output-check reads are left out
+    read = [s for s in tracer.spans
+            if s.start >= timed_from and s.request != CHECK_REQUEST]
     jobs = [j for s in read for j in s.attrs.get("jobs", [])]
     py_rows = sum(
         n["metrics"].get("number of output rows", 0.0)
@@ -221,7 +225,7 @@ def main(argv=None) -> int:
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
     os.environ["SPARK_GRAFT_CPUS"] = str(CORES)
-    os.environ["SPARK_GRAFT_SHUFFLE"] = str(SHUFFLE_PARTITIONS)
+    os.environ.setdefault("SPARK_GRAFT_SHUFFLE", str(SHUFFLE_PARTITIONS))
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
     os.environ["TMPDIR"] = tmp
     # every JVM the session starts (spark-submit's launcher too) keeps its
@@ -259,6 +263,7 @@ def main(argv=None) -> int:
         rss.stop()
         noise_end = box.snapshot()
         shutil.rmtree(work, ignore_errors=True)
+    t_stopped = time.time()
 
     setup_s = (ctx.setup_end - PROCESS_START) - sum(ctx.builds) + median(
         ctx.builds)
@@ -281,6 +286,7 @@ def main(argv=None) -> int:
     detail = {
         "workload": args.workload, "seed": args.seed, "trace": args.trace,
         "seconds": args.seconds, "cores": CORES,
+        "shuffle_partitions": int(os.environ["SPARK_GRAFT_SHUFFLE"]),
         "end_to_end": e2e,
         "samples": len(result["latencies"]),
         "tail": {"percentile": tail[0], "value": tail[1]} if tail else None,
@@ -288,6 +294,11 @@ def main(argv=None) -> int:
         "peak_rss_split_mb": {k: v / 2**20 for k, v in rss.peak_split.items()},
         "session_start_s": session_start_s,
         "setup_builds_s": ctx.builds,
+        # seconds from process start to: ready, end of the workload, and
+        # session stopped with the scratch directory removed
+        "phases_s": {"ready": ctx.setup_end - PROCESS_START,
+                     "workload_end": t_end - PROCESS_START,
+                     "stopped": t_stopped - PROCESS_START},
         "box_noise": {"start": noise_start, "end": noise_end},
         "failures": result["failures"],
         **result["detail"],

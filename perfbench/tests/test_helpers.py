@@ -60,6 +60,14 @@ def test_simweb_zipf_skews_hosts():
     assert counts[0] > 10 * counts[99]
 
 
+def test_expected_batch_caps_per_host_then_overall():
+    from perfbench.crawl import expected_batch
+
+    assert expected_batch([50, 3, 20], batch=1000, per_host=20) == 43
+    assert expected_batch([50, 3, 20], batch=30, per_host=20) == 30
+    assert expected_batch([], batch=1000, per_host=20) == 0
+
+
 def test_tail_percentile_needs_ten_beyond():
     assert tail_percentile(list(range(19))) is None
     # 20 samples: the median has exactly 10 beyond it, p90 only 2
