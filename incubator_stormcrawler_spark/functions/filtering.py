@@ -3,29 +3,110 @@
 filtering/URLFilters.java:49; applied in StatusEmitterBolt.java:85-113).
 
 Each filter: ``filter(source_url, source_metadata, target_url) ->
-target-or-None``. The chain is config-driven (urlfilters.json-style) and
-runs inside an Arrow-batched stage (``apply_filter_chain``) — at 100 TB the
-chain is a per-row pure function over the exploded-outlinks DataFrame, so
-it scales embarrassingly; the hot native subset (length caps, host compare)
-can be pushed into column expressions where profiling warrants.
+target-or-None``. The chain is config-driven (urlfilters.json-style).
+
+Compile rule (``apply_filter_chain``): a filter may also carry a column
+form, ``column(source, metadata, target) -> Column`` with null meaning
+rejected. The longest prefix of the chain whose filters all have one is
+compiled into Catalyst expressions and runs in the JVM; only the tail,
+from the first filter without a column form on, runs in one Arrow-batched
+``mapInPandas`` stage, which skips the rows the prefix already rejected.
+A chain of column-form filters never crosses the Python boundary.
 """
 
 from __future__ import annotations
 
+import functools
 import re
+import sys
+import unicodedata
 from urllib.parse import urlsplit
+
+from pyspark.sql import functions as F
 
 from .urls import BasicURLNormalizer, paid_level_domain
 
 
 class URLFilter:
+    # Optional native form: ``column(source, metadata, target) -> Column``
+    # over the outlink columns (``metadata`` is None when the frame has
+    # none), null meaning rejected. It must give exactly ``filter``'s
+    # verdict on every row and map a null target to null, so a compiled
+    # prefix short-circuits like the Python chain. None: Python only.
+    column = None
+
     def filter(self, source_url, source_metadata, target_url):
         raise NotImplementedError
 
 
+def _reject_when(cond, target):
+    """``target`` unless ``cond`` holds; null in stays null."""
+    return F.when(cond, F.lit(None).cast("string")).otherwise(target)
+
+
+# urlsplit's reading of a URL, as Java regexes (Python 3.11 urllib.parse):
+# leading C0 controls and spaces are stripped and tab/CR/LF removed first;
+# a scheme is an ASCII letter then scheme chars up to the first ':'; a
+# netloc follows '//' up to '/', '?' or '#'; the path ends at '?' or '#'.
+_SCHEME = r"^(?:[A-Za-z][A-Za-z0-9+.\-]*:)?"
+_PATH_RE = _SCHEME + r"(?://[^/?#]*)?([^?#]*)"
+_NETLOC_RE = _SCHEME + r"(//[^/?#]*)"
+# a bracketed host urlsplit accepts: IPvFuture, or an IPv6 address as
+# ipaddress parses it (RFC 3986 grammar, no leading-zero octets) with an
+# optional non-empty '%scope'
+_H16 = "[0-9A-Fa-f]{1,4}"
+_OCTET = "(?:25[0-5]|2[0-4][0-9]|1[0-9]{2}|[1-9]?[0-9])"
+_LS32 = f"(?:{_H16}:{_H16}|{_OCTET}(?:\\.{_OCTET}){{3}})"
+_IPV6 = "(?:" + "|".join(
+    [f"(?:{_H16}:){{6}}{_LS32}", f"::(?:{_H16}:){{5}}{_LS32}"]
+    + [
+        f"(?:(?:{_H16}:){{0,{k - 1}}}{_H16})?::{tail}"
+        for k, tail in [
+            (1, f"(?:{_H16}:){{4}}{_LS32}"),
+            (2, f"(?:{_H16}:){{3}}{_LS32}"),
+            (3, f"(?:{_H16}:){{2}}{_LS32}"),
+            (4, f"{_H16}:{_LS32}"),
+            (5, _LS32),
+            (6, _H16),
+            (7, ""),
+        ]
+    ]
+) + ")"
+_BRACKETED_HOST_RE = (
+    f"^(?:v[0-9A-Fa-f]+\\.[\\s\\S]+|{_IPV6}(?:%[^%]+)?)\\z"
+)
+
+
+@functools.cache
+def _nfkc_netloc_re() -> str:
+    """Character class of the code points whose NFKC form holds one of
+    '/?#@:' — a netloc with any of them makes urlsplit raise."""
+    chars = [
+        c for c in map(chr, range(0x80, sys.maxunicode + 1))
+        if unicodedata.decomposition(c)
+        and any(d in unicodedata.normalize("NFKC", c) for d in "/?#@:")
+    ]
+    return "[" + "".join(f"\\x{{{ord(c):x}}}" for c in chars) + "]"
+
+
+def _urlsplit_fails(url):
+    """Column: ``urlsplit(url)`` raises ValueError (bad brackets or a
+    netloc with NFKC-unsafe characters); ``url`` is already cleaned."""
+    netloc = F.regexp_extract(url, _NETLOC_RE, 1)
+    opened = netloc.contains("[")
+    closed = netloc.contains("]")
+    host = F.regexp_extract(netloc, r"\[([^\]]*)", 1)
+    return (
+        (opened != closed)
+        | (opened & closed & ~host.rlike(_BRACKETED_HOST_RE))
+        | netloc.rlike(_nfkc_netloc_re())
+    )
+
+
 class BasicURLFilter(URLFilter):
     """Reject over-long URLs and pathological repeated path elements
-    (filtering/basic/BasicURLFilter.java:29,31-63)."""
+    (filtering/basic/BasicURLFilter.java:29,31-63). A URL ``urlsplit``
+    cannot split is rejected too."""
 
     def __init__(self, max_path_repetition: int = 3, max_length: int = 512):
         self.max_rep = max_path_repetition
@@ -35,7 +116,10 @@ class BasicURLFilter(URLFilter):
         if self.max_len > 0 and len(target_url) > self.max_len:
             return None
         if self.max_rep >= 2:
-            path = urlsplit(target_url).path
+            try:
+                path = urlsplit(target_url).path
+            except ValueError:
+                return None
             counts: dict[str, int] = {}
             for seg in path.split("/"):
                 if seg:
@@ -43,6 +127,26 @@ class BasicURLFilter(URLFilter):
                     if counts[seg] > self.max_rep:
                         return None
         return target_url
+
+    def column(self, source, metadata, target):
+        reject = F.lit(False)
+        if self.max_len > 0:
+            # length() counts code points, like len()
+            reject = F.length(target) > self.max_len
+        if self.max_rep >= 2:
+            url = F.regexp_replace(
+                F.regexp_replace(target, r"^[\x00-\x20]+", ""), "[\t\r\n]", ""
+            )
+            segs = F.filter(
+                F.split(F.regexp_extract(url, _PATH_RE, 1), "/"),
+                lambda s: s != "",
+            )
+            repeated = F.exists(
+                segs,
+                lambda s: F.size(F.filter(segs, lambda t: t == s)) > self.max_rep,
+            )
+            reject = reject | _urlsplit_fails(url) | repeated
+        return _reject_when(reject, target)
 
 
 class SelfURLFilter(URLFilter):
@@ -52,6 +156,9 @@ class SelfURLFilter(URLFilter):
         if source_url is not None and target_url == source_url:
             return None
         return target_url
+
+    def column(self, source, metadata, target):
+        return _reject_when(source.isNotNull() & (target == source), target)
 
 
 class MaxDepthFilter(URLFilter):
@@ -72,6 +179,21 @@ class MaxDepthFilter(URLFilter):
         if limit > 0 and depth >= limit:
             return None
         return target_url
+
+    def column(self, source, metadata, target):
+        if metadata is None:
+            depth, limit = F.lit(0), F.lit(self.max_depth)
+        else:
+            depth = F.coalesce(
+                F.get(metadata["depth"], 0).cast("int"), F.lit(0)
+            )
+            limit = F.coalesce(
+                F.get(metadata["max.depth"], 0).cast("int"),
+                F.lit(self.max_depth),
+            )
+        return _reject_when(
+            (limit == 0) | ((limit > 0) & (depth >= limit)), target
+        )
 
 
 class HostURLFilter(URLFilter):
@@ -307,38 +429,40 @@ class _NormalizerAdapter(URLFilter):
 
 
 def apply_filter_chain(outlinks, chain: URLFilterChain):
-    """Arrow-batched chain application over
-    DataFrame(source_url, target_url[, metadata]) → adds ``filtered_url``
-    (null = rejected). Keep the rejection rows until the caller drops them —
-    useful for filter-efficacy metrics."""
+    """Chain application over DataFrame(source_url, target_url[, metadata])
+    → adds ``filtered_url`` (null = rejected). Keep the rejection rows until
+    the caller drops them — useful for filter-efficacy metrics.
+
+    The longest prefix of filters with a column form runs as Catalyst
+    expressions; the rest of the chain runs in one Arrow-batched stage
+    over the prefix's output (see the module docstring)."""
     import pandas as pd
 
-    from pyspark.sql import types as T
-
-    if not chain.filters:
-        # empty chain is the identity — skip the Arrow round-trip entirely
-        # (a per-row Python stage costs seconds per 10k rows even when it
-        # does nothing)
-        from pyspark.sql import functions as F
-
-        return outlinks.withColumn("filtered_url", F.col("target_url"))
-
     has_md = "metadata" in outlinks.columns
+    md = F.col("metadata") if has_md else None
+    out = outlinks.withColumn("filtered_url", F.col("target_url"))
+    n_native = 0
+    for f in chain.filters:
+        if f.column is None:
+            break
+        out = out.withColumn(
+            "filtered_url",
+            f.column(F.col("source_url"), md, F.col("filtered_url")),
+        )
+        n_native += 1
+    tail = URLFilterChain(chain.filters[n_native:])
+    if not tail.filters:
+        return out
 
     def run(batches):
         for pdf in batches:
             md_col = pdf["metadata"] if has_md else [None] * len(pdf)
             filtered = [
-                chain.filter(s, m, t)
-                for s, m, t in zip(pdf["source_url"], md_col, pdf["target_url"])
+                None if t is None else tail.filter(s, m, t)
+                for s, m, t in zip(pdf["source_url"], md_col, pdf["filtered_url"])
             ]
-            pdf = pdf.assign(
+            yield pdf.assign(
                 filtered_url=pd.Series(filtered, index=pdf.index, dtype=object)
             )
-            yield pdf
 
-    schema = T.StructType(
-        list(outlinks.schema.fields)
-        + [T.StructField("filtered_url", T.StringType(), True)]
-    )
-    return outlinks.mapInPandas(run, schema=schema)
+    return out.mapInPandas(run, schema=out.schema)

@@ -294,6 +294,24 @@ PARSE_RESULT_DDL = (
 )
 
 
+def page_record(p: ParsedPage) -> dict:
+    """One ``PARSE_RESULT_DDL`` row."""
+    return {
+        "url": p.url,
+        "text": p.text,
+        "title": p.title,
+        "charset": p.charset,
+        "redirect": p.redirect,
+        "robots_noindex": p.robots_noindex,
+        "robots_nofollow": p.robots_nofollow,
+        "error": p.error,
+        "outlinks": [
+            {"target_url": t, "anchor": a, "nofollow": nf}
+            for (t, a, nf) in p.outlinks
+        ],
+    }
+
+
 def parse_pages(
     pages,  # DataFrame(url, content, [content_type])
     max_outlinks: int | None = 100,
@@ -314,30 +332,10 @@ def parse_pages(
             for row in pdf.itertuples(index=False):
                 ct = getattr(row, "content_type", None) if has_ct else None
                 content = bytes(row.content) if row.content is not None else b""
-                p = parse_html_page(
+                out.append(page_record(parse_html_page(
                     row.url, content, ct, max_outlinks=max_outlinks,
                     normalize=normalize,
-                )
-                out.append(
-                    {
-                        "url": p.url,
-                        "text": p.text,
-                        "title": p.title,
-                        "charset": p.charset,
-                        "redirect": p.redirect,
-                        "robots_noindex": p.robots_noindex,
-                        "robots_nofollow": p.robots_nofollow,
-                        "error": p.error,
-                        "outlinks": [
-                            {
-                                "target_url": t,
-                                "anchor": a,
-                                "nofollow": nf,
-                            }
-                            for (t, a, nf) in p.outlinks
-                        ],
-                    }
-                )
+                )))
             yield pd.DataFrame(out)
 
     cols = ["url", "content"] + (["content_type"] if has_ct else [])

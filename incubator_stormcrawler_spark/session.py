@@ -69,7 +69,7 @@ def get_spark(
     # formula reproduces it and holds on any executor shape. Env knob wins.
     n_cores = os.cpu_count() or 1
     try:
-        n_cores = int(cpus)
+        n_cores = max(1, int(cpus))
     except ValueError:
         pass
     shj_default = shj_local_map_threshold(_parse_mem_bytes(driver_mem), n_cores)

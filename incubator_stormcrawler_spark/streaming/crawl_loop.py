@@ -33,7 +33,9 @@ from pyspark.sql import functions as F
 from ..functions.filtering import URLFilterChain, apply_filter_chain
 from ..operators.frontier import frontier_topk
 from ..operators.status_merge import merge_status_updates
-from ..parse.html import parse_pages, split_parse_streams
+# parse_pages stays a module attribute: perfbench's tracer wraps it by name
+from ..parse.html import parse_pages, split_parse_streams  # noqa: F401
+from ..parse.router import route_and_parse, routed_branches
 from ..protocol.fetch import fetch
 from .frontier_table import FrontierTable
 
@@ -685,24 +687,13 @@ class CrawlLoop:
                 prefix=f"gen-{self.generation:05d}",
             )
         # parse cascade (SiteMapParserBolt → FeedParserBolt → JSoupParserBolt,
-        # §3.1 step 4): sniff-route each page, then union the branches'
-        # discovered links. Sitemap entries/sub-sitemaps and feed entries
-        # join the outlink stream; HTML contributes docs + anchors.
-        from ..parse.router import classify_pages
-        from ..parse.sitemap import parse_sitemaps
-        from ..parse.feed import parse_feeds
-
-        classified = classify_pages(pages).cache()
-        html_pages = classified.where(F.col("kind") == "html").select(
-            "url", "content"
-        )
-        parsed = parse_pages(html_pages, max_outlinks=self.max_outlinks).cache()
+        # §3.1 step 4): one Arrow pass sniffs each page and parses it by
+        # kind; the branches are projections of its one cache. Sitemap
+        # entries/sub-sitemaps and feed entries join the outlink stream;
+        # HTML contributes docs + anchors.
+        routed = route_and_parse(pages, max_outlinks=self.max_outlinks).cache()
+        parsed, sitemaps, feeds = routed_branches(routed)
         docs, outlinks, html_status = split_parse_streams(parsed)
-
-        sitemaps = parse_sitemaps(
-            classified.where(F.col("kind") == "sitemap")
-        ).cache()
-        feeds = parse_feeds(classified.where(F.col("kind") == "feed")).cache()
         sitemap_links = (
             sitemaps.select(
                 F.col("url").alias("source_url"),
@@ -769,7 +760,7 @@ class CrawlLoop:
             if gen_host_edges.count():
                 gen_host_edges.write.mode("append").parquet(hp)
         # xml/other pages report FETCHED (pass-through bolts ack to status)
-        xml_status = classified.where(F.col("kind") != "html").select(
+        xml_status = routed.where(F.col("kind") != "html").select(
             "url", F.lit("FETCHED").alias("status")
         )
         parse_status = html_status.select("url", "status").union(xml_status)
@@ -901,15 +892,18 @@ class CrawlLoop:
             )
             updates = updates.join(sigs, "url", "left")
 
-        # Materialize the expensive Python stages exactly once, in
-        # dependency order, so no cold cache is raced by two branches of
-        # the same job: (1) the politeness fetch, (2) the HTML parse, then
-        # (3) ONE merge action that pulls the remaining branches (classify
-        # routing, sitemap/feed links, filter chain) through their caches
-        # while writing the next frontier snapshot. The per-stage counters
-        # afterwards are cache reads, not plan re-executions (round 3 ran
-        # 5 counting actions BEFORE the merge and re-executed the top-k,
-        # outlink and filter plans up to 3× each — the 537 p/s regression).
+        # Materialize the two Python stages exactly once, in dependency
+        # order, so no cold cache is raced by two branches of the same
+        # job: (1) the politeness fetch, (2) the one-pass route-and-parse
+        # (docs.count() fills its cache), then (3) ONE merge action that
+        # pulls the remaining JVM-side branches (sitemap/feed/redirect
+        # links, the outlink union, the compiled filter chain) through
+        # their caches while writing the next frontier snapshot. A filter
+        # without a column form adds a third Python stage inside (3).
+        # The per-stage counters afterwards are cache reads, not plan
+        # re-executions (round 3 ran 5 counting actions BEFORE the merge
+        # and re-executed the top-k, outlink and filter plans up to 3×
+        # each — the 537 p/s regression).
         fetched_ok = pages.count()
         n_docs = docs.count()
         n_deleted = 0
@@ -1078,8 +1072,7 @@ class CrawlLoop:
             ).write.mode("append").parquet(self.metrics_path + "_status")
         # release every per-generation cache — leaked cached RDDs accumulate
         # block-manager memory across generations and degrade later shuffles
-        for df in (batch, discovered, outlinks, classified, sitemaps, feeds,
-                   fetched, parsed):
+        for df in (batch, discovered, outlinks, routed, fetched):
             df.unpersist()
         if hits is not None:
             hits.unpersist()

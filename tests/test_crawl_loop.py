@@ -233,6 +233,48 @@ def test_crawl_follows_sitemaps_and_feeds(spark, tmp_path):
     assert frontier == {u: "FETCHED" for u in site}
 
 
+@pytest.mark.parametrize("tail", [False, True], ids=["native", "python_tail"])
+def test_malformed_sitemap_outlinks_do_not_fail_generation(spark, tmp_path, tail):
+    """A sitemap <loc> urlsplit cannot split (unbalanced or invalid
+    bracketed host) is rejected by BasicURLFilter — natively, or in the
+    Python tail when a Python-only filter precedes it — instead of
+    failing the generation."""
+    from incubator_stormcrawler_spark.functions.filtering import (
+        BasicURLFilter,
+        RegexURLFilter,
+        SelfURLFilter,
+    )
+
+    bad = ["http://[::1/x", "http://[zz]/y", "http://[1.2.3.4]/z"]
+    sitemap = (
+        b'<?xml version="1.0"?>'
+        b'<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
+        + b"".join(b"<url><loc>%s</loc></url>" % u.encode() for u in bad)
+        + b"<url><loc>https://h0.example/page1</loc></url></urlset>"
+    )
+    site = {
+        "https://h0.example/sitemap.xml": sitemap,
+        "https://h0.example/page1": "<html>leaf</html>",
+    }
+    filters = [BasicURLFilter(), SelfURLFilter()]
+    if tail:
+        filters.insert(0, RegexURLFilter(["+."]))
+    loop = CrawlLoop(
+        spark,
+        frontier_path=str(tmp_path / "frontier"),
+        protocol_factory=lambda: MemoryProtocol(site),
+        filter_chain=URLFilterChain(filters),
+        server_delay=0.0,
+    )
+    loop.inject_seeds(
+        spark.createDataFrame([("https://h0.example/sitemap.xml",)], ["url"])
+    )
+    stats = loop.run(2)
+    assert [s["fetched_ok"] for s in stats] == [1, 1]
+    frontier = {r.url: r.status for r in loop.read_frontier().collect()}
+    assert frontier == {u: "FETCHED" for u in site}
+
+
 def test_robots_sitemap_discovery_feeds_loop(spark, tmp_path):
     """robots.txt Sitemap: declarations inject the sitemap into the
     frontier; the next generation fetches and expands it."""

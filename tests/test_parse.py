@@ -221,6 +221,60 @@ def test_parse_router(spark):
     assert [r.url for r in out["other"].collect()] == ["https://a.example/img.png"]
 
 
+def test_route_and_parse_matches_branch_stages(spark):
+    """The one-pass router's html/sitemap/feed projections equal the
+    per-branch parse stages over classify_pages' branches, on the router
+    test's mixed corpus plus a sitemap index and an Atom feed."""
+    from pyspark.sql import Row
+    from pyspark.sql import functions as F
+
+    from incubator_stormcrawler_spark.parse.feed import parse_feeds
+    from incubator_stormcrawler_spark.parse.html import parse_pages
+    from incubator_stormcrawler_spark.parse.router import (
+        classify_pages,
+        route_and_parse,
+        routed_branches,
+    )
+    from incubator_stormcrawler_spark.parse.sitemap import parse_sitemaps
+
+    df = spark.createDataFrame(
+        [
+            Row(url="https://a.example/page", content=bytearray(HTML)),
+            Row(url="https://a.example/map", content=bytearray(SITEMAP)),
+            Row(url="https://a.example/index", content=bytearray(SITEMAP_INDEX)),
+            Row(url="https://a.example/feed", content=bytearray(RSS)),
+            Row(url="https://a.example/atom", content=bytearray(ATOM)),
+            Row(url="https://a.example/note", content=bytearray(b"just plain text")),
+            Row(url="https://a.example/doc.pdf", content=bytearray(b"%PDF-1.4 xx")),
+            Row(url="https://a.example/img.png",
+                content=bytearray(b"\x89PNG\r\n\x1a\nxx")),
+        ]
+    )
+
+    def rows(d):
+        return sorted((r.asDict(recursive=True) for r in d.collect()),
+                      key=lambda r: r["url"])
+
+    classified = classify_pages(df)
+    branch = {k: classified.where(F.col("kind") == k)
+              for k in ("html", "sitemap", "feed")}
+    parsed, sitemaps, feeds = routed_branches(route_and_parse(df, max_outlinks=2))
+    want_html = parse_pages(branch["html"], max_outlinks=2)
+    assert parsed.schema.simpleString() == want_html.schema.simpleString()
+    assert rows(parsed) == rows(want_html)
+    assert len(rows(parsed)[0]["outlinks"]) == 2
+    want_sitemaps = parse_sitemaps(branch["sitemap"])
+    assert sitemaps.schema.simpleString() == want_sitemaps.schema.simpleString()
+    assert rows(sitemaps) == rows(want_sitemaps)
+    assert [r["url"] for r in rows(sitemaps)] == [
+        "https://a.example/index", "https://a.example/map"]
+    want_feeds = parse_feeds(branch["feed"])
+    assert feeds.schema.simpleString() == want_feeds.schema.simpleString()
+    assert rows(feeds) == rows(want_feeds)
+    assert [r["url"] for r in rows(feeds)] == [
+        "https://a.example/atom", "https://a.example/feed"]
+
+
 def test_media_link_extraction():
     """LinkParseFilter analog (parse/filter/LinkParseFilter.java): harvest
     //IMG/@src-style links."""

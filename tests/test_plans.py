@@ -744,3 +744,36 @@ def test_dedupe_updates_hash_aggregates(spark):
     assert "HashAggregate" in plan
     assert "SortAggregate" not in plan
     assert "ObjectHashAggregate" not in plan
+
+
+def test_native_filter_prefix_and_one_pass_router(spark):
+    """A chain of column-form filters compiles to Catalyst expressions (no
+    Python stage); a Python-only tail adds exactly one. The parse router
+    is one Python stage with no join bringing content back by url."""
+    from incubator_stormcrawler_spark.functions.filtering import (
+        BasicURLFilter,
+        RegexURLFilter,
+        SelfURLFilter,
+        URLFilterChain,
+        apply_filter_chain,
+    )
+    from incubator_stormcrawler_spark.parse.router import route_and_parse
+
+    links = spark.createDataFrame(
+        [("https://a.example/", "https://a.example/x")],
+        "source_url string, target_url string",
+    )
+    native = [BasicURLFilter(), SelfURLFilter()]
+    p = plan_of(apply_filter_chain(links, URLFilterChain(native)))
+    assert "MapInPandas" not in p
+    tail = native + [RegexURLFilter(["+."])]
+    p = plan_of(apply_filter_chain(links, URLFilterChain(tail)))
+    assert p.count("MapInPandas") == 1
+
+    pages = spark.createDataFrame(
+        [("https://a.example/", bytearray(b"<html><a href='/x'>x</a></html>"))],
+        "url string, content binary",
+    )
+    p = plan_of(route_and_parse(pages))
+    assert p.count("MapInPandas") == 1
+    assert "Join" not in p

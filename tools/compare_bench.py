@@ -23,28 +23,32 @@ def load(path: str) -> dict:
     return q
 
 
+def compare(a: dict, b: dict) -> list[tuple[float, str, float, float]]:
+    """(B/A, name, A, B) for every query with a positive timing in both,
+    ascending by ratio; totals over these rows compare the same queries."""
+    return sorted(
+        (b[nm] / a[nm], nm, a[nm], b[nm])
+        for nm in set(a) & set(b)
+        if a[nm] > 0 and b[nm] > 0
+    )
+
+
 def main() -> None:
     a_path, b_path = sys.argv[1], sys.argv[2]
     thr = float(sys.argv[3]) if len(sys.argv) > 3 else 0.10
     a, b = load(a_path), load(b_path)
-    common = sorted(set(a) & set(b))
-    rows = []
-    logs = []
-    for nm in common:
-        ta, tb = a[nm], b[nm]
-        if ta <= 0 or tb <= 0:
-            continue
-        r = tb / ta
-        logs.append(math.log(r))
-        rows.append((r, nm, ta, tb))
-    rows.sort()
+    rows = compare(a, b)
+    if not rows:
+        print("n_common=0: no query has a positive timing in both files")
+        return
     n_imp = sum(1 for r, *_ in rows if r < 1 - thr)
     n_reg = sum(1 for r, *_ in rows if r > 1 + thr)
+    geomean = math.exp(sum(math.log(r) for r, *_ in rows) / len(rows))
     print(f"n_common={len(rows)} improved>{int(thr*100)}%={n_imp} "
           f"regressed>{int(thr*100)}%={n_reg} "
-          f"geomean_ratio={math.exp(sum(logs)/len(logs)):.3f} "
-          f"total {sum(a[n] for _, n, *_ in [(0,n) for n in common if a[n]>0]):.1f}"
-          f" -> {sum(b[n] for n in common if b[n]>0):.1f}")
+          f"geomean_ratio={geomean:.3f} "
+          f"total {sum(ta for _, _, ta, _ in rows):.1f}"
+          f" -> {sum(tb for *_, tb in rows):.1f}")
     print("--- improved (B/A asc) ---")
     for r, nm, ta, tb in rows:
         if r < 1 - thr:
